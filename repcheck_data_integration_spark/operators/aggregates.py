@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .ckpt import pin
+from .topk import top_k
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import literal_frame, load, load_bucketed
@@ -350,17 +351,12 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = li.groupBy("l_returnflag", "l_quantity").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w = W.partitionBy("l_returnflag").orderBy(
-        F.col("cnt").desc(), F.col("l_quantity")
-    )
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_returnflag",
-            F.col("l_quantity").alias("mode_qty"),
-            F.col("cnt").cast("long").alias("n"),
-        )
+    return top_k(
+        c, ["l_returnflag"], [F.col("cnt").desc(), F.col("l_quantity")]
+    ).select(
+        "l_returnflag",
+        F.col("l_quantity").alias("mode_qty"),
+        F.col("cnt").cast("long").alias("n"),
     )
 
 
@@ -1506,15 +1502,8 @@ def agg_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("target"),
     )
-    pick = (
-        tgt.join(c, F.col("cum") >= F.col("target"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("q_pct").orderBy("bucket_id")
-            ),
-        )
-        .filter(F.col("rn") == 1)
+    pick = top_k(
+        tgt.join(c, F.col("cum") >= F.col("target")), ["q_pct"], ["bucket_id"]
     )
     est = (
         F.floor(

@@ -3,7 +3,7 @@
 Iterative loops with data-dependent control flow (connected components'
 convergence probe, BPE's per-round argmax collect, PCA's per-step collect)
 execute jobs at DataFrame-CONSTRUCTION time even under
-``operators.ckpt.PLAN_ONLY`` — so their loop-carried frames are inherently
+``operators.ckpt.plan_only()`` — so their loop-carried frames are inherently
 lineage-truncated ``LogicalRDD`` leaves in any plan the window audit can
 walk, and a pin() reroute cannot help (the probes, not the checkpoints,
 force execution). graph_kcore is the one loop WITHOUT probes that still

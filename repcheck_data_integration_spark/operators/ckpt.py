@@ -10,7 +10,7 @@ Round-9, from two round-8 advisories:
    into — a window upstream of the checkpoint would be invisible to the
    audit, the same blindness class round 8 fixed for ``.persist()``.
    Routing every build-time checkpoint through ``pin()`` gives those
-   consumers one switch (``PLAN_ONLY = True``) that returns the frame
+   consumers one switch (``with plan_only():``) that returns the frame
    un-checkpointed, so the FULL logical plan stays auditable and query
    construction has no job-execution side effects. Iterative loops whose
    convergence probes execute at build time anyway (connected
@@ -38,26 +38,44 @@ Round-9, from two round-8 advisories:
 
 from __future__ import annotations
 
+import os
+import time
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame, SparkSession
 
-# Plan-only consumers (window_audit, plan-shape tests) flip this to True
-# to build queries WITHOUT build-time checkpoint side effects, so the
-# optimized plan exposes the full pre-checkpoint tree. Never set it in a
-# path that will EXECUTE the query: the multi-branch lattices downstream
-# of pin() re-run their upstream DAG once per branch when unpinned.
-PLAN_ONLY = False
+# Plan-only consumers (window_audit, plan-shape tests) build queries
+# inside ``with plan_only():`` to skip build-time checkpoint side effects,
+# so the optimized plan exposes the full pre-checkpoint tree. Never build
+# a query that will EXECUTE inside it: the multi-branch lattices
+# downstream of pin() re-run their upstream DAG once per branch when
+# unpinned.
+_PLAN_ONLY: ContextVar[bool] = ContextVar("plan_only", default=False)
+
+
+@contextmanager
+def plan_only(on: bool = True) -> Iterator[None]:
+    """Set plan-only mode for the block, restoring the prior mode on exit
+    (re-entrant: nested blocks unwind in order)."""
+    token = _PLAN_ONLY.set(on)
+    try:
+        yield
+    finally:
+        _PLAN_ONLY.reset(token)
 
 
 def pin(df: DataFrame) -> DataFrame:
     """Eagerly localCheckpoint a SMALL multi-branch frame (bounded grid /
     per-entity aggregate), unless a plan-only consumer disabled
     build-time side effects."""
-    if PLAN_ONLY:
+    if _PLAN_ONLY.get():
         return df
     return df.localCheckpoint(eager=True)
 
 
-# (applicationId, sf_dir, layout salt, content fingerprint)
+# (applicationId, sf_dir, layout salt, content fingerprint[, "stream"])
 #   -> (owning session, components frame)
 # Keyed on applicationId, NOT id(spark) (VERDICT r9 #6: CPython reuses
 # ids after GC, so a new session could alias a dead session's entry and
@@ -85,15 +103,58 @@ def _sweep_dead_sessions() -> None:
         del _COMPONENTS_CACHE[k]
 
 
+def _memo_components(
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[], DataFrame],
+    tag: tuple,
+    label: str,
+) -> DataFrame:
+    """``build()`` once per (session, documents-content, ``tag``), served
+    from an eager localCheckpoint; the build time lands in
+    ``tables.FIXED_COSTS["<label>:<sf dir name>"]``.
+
+    Falls back to a fresh un-memoized build when the fixture path has no
+    stat-able parquet (probe harnesses patching tables.load) — the memo
+    is an optimization, never a correctness dependency."""
+    from .. import tables
+
+    try:
+        fp = tables._content_fingerprint(
+            os.path.join(sf_dir, "documents.parquet")
+        )
+    except OSError:
+        return build()
+    _sweep_dead_sessions()
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        tables.LAYOUT_SALT,
+        fp,
+        *tag,
+    )
+    hit = _COMPONENTS_CACHE.get(key)
+    if hit is not None:
+        return hit[1]
+    t0 = time.time()
+    # Build with checkpoints ENABLED even when a plan-only consumer
+    # triggers the first build: the memoized frame must be identical no
+    # matter who touches it first (an unpinned lattice build would be
+    # slower and plan-deeper for the same values).
+    with plan_only(False):
+        comp = build().localCheckpoint(eager=True)
+    tables.FIXED_COSTS[
+        f"{label}:{os.path.basename(sf_dir.rstrip('/'))}"
+    ] = round(time.time() - t0, 3)
+    _COMPONENTS_CACHE[key] = (spark, comp)
+    return comp
+
+
 def shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_components' (doc_id, canonical_doc_id) frame, computed once
     per (session, documents-content) and served from a localCheckpoint.
 
-    Falls back to a fresh un-memoized build when the fixture path has no
-    stat-able parquet (probe harnesses patching tables.load) — the memo
-    is an optimization, never a correctness dependency.
-
-    PLAN_ONLY consumers are served from the memo too (round-11): the
+    Plan-only consumers are served from the memo too (round-11): the
     components loop executes its convergence probes at CONSTRUCTION time
     regardless, so the consumer's optimized plan ends in a
     lineage-truncated checkpoint leaf EITHER WAY (that is exactly why
@@ -101,46 +162,15 @@ def shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hooks) — a fresh build bought the audit nothing while re-running the
     full LSH+CC DAG once per consumer (~11 s × 4 consumers per
     window_audit sweep at sf0.001, measured round-11)."""
-    import os
-
-    from .. import tables
     from .dedup import dedup_components
 
-    try:
-        fp = tables._content_fingerprint(
-            os.path.join(sf_dir, "documents.parquet")
-        )
-    except OSError:
-        return dedup_components(spark, sf_dir)
-    _sweep_dead_sessions()
-    key = (
-        spark.sparkContext.applicationId,
+    return _memo_components(
+        spark,
         sf_dir,
-        tables.LAYOUT_SALT,
-        fp,
+        lambda: dedup_components(spark, sf_dir),
+        (),
+        "components",
     )
-    hit = _COMPONENTS_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    import time as _time
-
-    _t0 = _time.time()
-    # Build with checkpoints ENABLED even when a PLAN_ONLY consumer
-    # triggers the first build: the memoized frame must be identical no
-    # matter who touches it first (an unpinned lattice build would be
-    # slower and plan-deeper for the same values).
-    global PLAN_ONLY
-    prior = PLAN_ONLY
-    PLAN_ONLY = False
-    try:
-        comp = dedup_components(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        PLAN_ONLY = prior
-    tables.FIXED_COSTS[
-        f"components:{os.path.basename(sf_dir.rstrip('/'))}"
-    ] = round(_time.time() - _t0, 3)
-    _COMPONENTS_CACHE[key] = (spark, comp)
-    return comp
 
 
 def shared_stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,52 +181,18 @@ def shared_stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement + iterative-CC DAG (~3 s at sf0.1) from the identical
     (doc_id, text) input; like the r9 memo, on a cluster this frame is
     the maintained dedup-cluster state table the streaming fold persists,
-    and the memo stands in for that materialization locally. Same
-    fallback: fresh un-memoized build when the fixture path has no
-    stat-able parquet. PLAN_ONLY consumers read the memo as of round 11
-    for the same reason as shared_components (the CC loop truncates the
-    consumer's plan identically either way; the pins + one-round hooks
-    are the audit coverage)."""
-    import os
-
+    and the memo stands in for that materialization locally. Plan-only
+    consumers read the memo as of round 11 for the same reason as
+    shared_components."""
     from .. import tables
     from ..streaming.stream_ops import minhash_components_batch
 
-    def _build() -> DataFrame:
-        docs = tables.load(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        return minhash_components_batch(docs)
-
-    try:
-        fp = tables._content_fingerprint(
-            os.path.join(sf_dir, "documents.parquet")
-        )
-    except OSError:
-        return _build()
-    _sweep_dead_sessions()
-    key = (
-        spark.sparkContext.applicationId,
+    return _memo_components(
+        spark,
         sf_dir,
-        tables.LAYOUT_SALT,
-        fp,
-        "stream",
+        lambda: minhash_components_batch(
+            tables.load(spark, sf_dir, "documents").select("doc_id", "text")
+        ),
+        ("stream",),
+        "stream_components",
     )
-    hit = _COMPONENTS_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    import time as _time
-
-    _t0 = _time.time()
-    global PLAN_ONLY
-    prior = PLAN_ONLY
-    PLAN_ONLY = False
-    try:
-        comp = _build().localCheckpoint(eager=True)
-    finally:
-        PLAN_ONLY = prior
-    tables.FIXED_COSTS[
-        f"stream_components:{os.path.basename(sf_dir.rstrip('/'))}"
-    ] = round(_time.time() - _t0, 3)
-    _COMPONENTS_CACHE[key] = (spark, comp)
-    return comp

@@ -610,7 +610,7 @@ def cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     VERDICT r9 #5) so operators/audit_hooks.py can build a representative
     round over LocalRelation stand-ins and the window audit can walk the
     loop body's plan — the loop's convergence .count() probes execute at
-    construction even under ckpt.PLAN_ONLY, so the final label frames are
+    construction even under ckpt.plan_only(), so the final label frames are
     inherently lineage-truncated leaves; auditing round 1 audits them all
     (the body is identical per round).
 

@@ -17,6 +17,7 @@ from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
 from .dedup import sql_stable_round4
+from .topk import top_k
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,14 +356,13 @@ def lp_round(closed: DataFrame, labels: DataFrame) -> DataFrame:
     """ONE synchronous LP round, pre-checkpoint: closed-neighborhood
     frequency vote, ties to the smallest label (deterministic). The
     row_number window is PARTITIONED by node — no global funnel."""
-    w = W.partitionBy("v").orderBy(F.col("cnt").desc(), F.col("lbl"))
-    return (
+    votes = (
         closed.join(labels.select(F.col("v").alias("n"), "lbl"), "n")
         .groupBy("v", "lbl")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("v", "lbl")
+    )
+    return top_k(votes, ["v"], [F.col("cnt").desc(), F.col("lbl")]).select(
+        "v", "lbl"
     )
 
 

@@ -107,7 +107,7 @@ def grouped_prefix_offsets(
     which would re-run the whole DAG per branch). Every window is
     partitioned by (group, bucket) or (group, super-bucket); the top
     level is a broadcast theta join over |groups| x {GP_B2} rows."""
-    vp = pin(vals)  # ckpt.PLAN_ONLY consumers audit the full tree
+    vp = pin(vals)  # ckpt.plan_only() consumers audit the full tree
     mm = vp.groupBy(*grp_cols).agg(
         F.min(F.col(order_col).cast("double")).alias("_mn"),
         F.max(F.col(order_col).cast("double")).alias("_mx"),

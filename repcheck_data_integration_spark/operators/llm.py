@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load
+from .topk import top_k
 
 SUMMARY_TOKENS = 12
 
@@ -675,16 +676,14 @@ def _register_rag_query() -> None:
                 "q_doc", "q_chunk", "c_doc", "c_chunk", dot.alias("dot")
             )
         )
-        from pyspark.sql import Window as PW
-
-        rn = F.row_number().over(
-            PW.partitionBy("q_doc", "q_chunk").orderBy(
-                F.col("dot").desc(), "c_doc", "c_chunk"
-            )
-        )
         return (
-            scored.withColumn("rnk", rn)
-            .filter(F.col("rnk") <= RAG_TOPK)
+            top_k(
+                scored,
+                ["q_doc", "q_chunk"],
+                [F.col("dot").desc(), "c_doc", "c_chunk"],
+                k=RAG_TOPK,
+                rank_col="rnk",
+            )
             .select(
                 "q_doc",
                 F.col("q_chunk").cast("long").alias("q_chunk"),

@@ -72,7 +72,7 @@ def prefix_offsets(
     the output, which would re-run the whole prefix DAG once per
     branch). Exclusive prefix sums, computed without any unpartitioned
     window (module docstring)."""
-    vp = pin(vals)  # ckpt.PLAN_ONLY consumers audit the full tree
+    vp = pin(vals)  # ckpt.plan_only() consumers audit the full tree
     mm = vp.agg(
         F.min(order_col).alias("_mn"), F.max(order_col).alias("_mx")
     )

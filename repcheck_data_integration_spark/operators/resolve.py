@@ -29,6 +29,7 @@ from ..registry import register
 from .dedup import sql_stable_round4, stable_round4
 from ..functions.exact import scaled_long
 from ..tables import load
+from .topk import top_k
 
 DEFAULT_THRESHOLD = 0.8  # mirrors vote_matching.py:178 (score >= 80)
 
@@ -107,11 +108,12 @@ def resolve_entities(
             scorer(F.col(f"r.{probe_name}"), F.col(f"c.{cand_name}"))
         ).alias("score"),
     )
-    w = W.partitionBy(probe_id).orderBy(F.col("score").desc(), F.col(cand_id))
     fuzzy = (
-        scored.filter(F.col("score") >= threshold)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        top_k(
+            scored.filter(F.col("score") >= threshold),
+            [probe_id],
+            [F.col("score").desc(), F.col(cand_id)],
+        )
         .select(
             probe_id,
             F.col(cand_id).alias("matched_id"),
@@ -303,15 +305,14 @@ def join_fuzzy_tokensort(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = 1.0 - F.levenshtein(na, nb) / F.greatest(
         F.length(na), F.length(nb), F.lit(1)
     )
-    w = W.partitionBy("probe_id").orderBy(F.col("score").desc(), F.col("cand_id"))
-    return (
+    scored = (
         probes.join(cands, "block")
         .select("probe_id", "cand_id", stable_round4(score).alias("score"))
         .filter(F.col("score") >= DEFAULT_THRESHOLD)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("probe_id", F.col("cand_id").alias("matched_id"), "score")
     )
+    return top_k(
+        scored, ["probe_id"], [F.col("score").desc(), F.col("cand_id")]
+    ).select("probe_id", F.col("cand_id").alias("matched_id"), "score")
 
 
 @register(
@@ -406,14 +407,12 @@ def join_fuzzy_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = p1.unionByName(p2).distinct()
     score = stable_round4(levenshtein_ratio(F.col("pname"), F.col("cname")))
-    w = W.partitionBy("probe_id").orderBy(F.col("score").desc(), F.col("cand_id"))
-    return (
-        pairs.select("probe_id", "cand_id", score.alias("score"))
-        .filter(F.col("score") >= DEFAULT_THRESHOLD)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("probe_id", F.col("cand_id").alias("matched_id"), "score")
+    scored = pairs.select("probe_id", "cand_id", score.alias("score")).filter(
+        F.col("score") >= DEFAULT_THRESHOLD
     )
+    return top_k(
+        scored, ["probe_id"], [F.col("score").desc(), F.col("cand_id")]
+    ).select("probe_id", F.col("cand_id").alias("matched_id"), "score")
 
 
 # --- Fellegi–Sunter probabilistic record linkage ---------------------------
@@ -929,15 +928,7 @@ def join_phonetic_block(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.levenshtein("probe_tok", F.col("c.tok")).alias("lev"),
         )
     )
-    ranked = cand.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("probe_tok", "orig_tok").orderBy(
-                "lev", "cand_tok"
-            )
-        ),
-    )
-    return ranked.filter(F.col("rn") == 1).select(
+    return top_k(cand, ["probe_tok", "orig_tok"], ["lev", "cand_tok"]).select(
         "probe_tok",
         "orig_tok",
         F.col("code").alias("block_code"),

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import scaled_long
 from ..registry import register
 from ..tables import literal_frame, load
+from .topk import packed_argmin, packed_idx, packed_score, top_k
 from .dedup import (
     SQL_DOT,
     cosine,
@@ -76,14 +77,12 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = dot_double(F.col("q_emb"), F.col("c_emb")) / (
         F.col("q_n") * F.col("c_n")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", cos.alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "cand_id", stable_round4(F.col("cos")).alias("cosine_sim"))
+    pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id")).select(
+        "query_id", "cand_id", cos.alias("cos")
     )
+    return top_k(
+        pairs, ["query_id"], [F.col("cos").desc(), F.col("cand_id")], k=TOP_K
+    ).select("query_id", "cand_id", stable_round4(F.col("cos")).alias("cosine_sim"))
 
 
 def cell_centroids(e: DataFrame) -> DataFrame:
@@ -216,21 +215,18 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pick n_probe cells per query (centroid table is tiny → broadcast)
     qc = q.join(F.broadcast(cents))
-    wcell = W.partitionBy("query_id").orderBy(
-        F.col("cent_cos").desc(), F.col("label")
-    )
-    probed = (
+    probed = top_k(
         qc.select(
             "query_id",
             "q_emb",
             "q_n",
             "label",
             cosine(F.col("q_emb"), F.col("centroid")).alias("cent_cos"),
-        )
-        .withColumn("rn", F.row_number().over(wcell))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "q_emb", "q_n", "label")
-    )
+        ),
+        ["query_id"],
+        [F.col("cent_cos").desc(), F.col("label")],
+        k=3,
+    ).select("query_id", "q_emb", "q_n", "label")
     c = e.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_emb"),
@@ -240,16 +236,13 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = dot_double(F.col("q_emb"), F.col("c_emb")) / (
         F.col("q_n") * F.col("c_n")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
+    pairs = c.join(
+        F.broadcast(probed),
+        (F.col("label") == F.col("c_label"))
+        & (F.col("query_id") != F.col("cand_id")),
+    ).select("query_id", "cand_id", cos.alias("cos"))
     return (
-        c.join(
-            F.broadcast(probed),
-            (F.col("label") == F.col("c_label"))
-            & (F.col("query_id") != F.col("cand_id")),
-        )
-        .select("query_id", "cand_id", cos.alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
+        top_k(pairs, ["query_id"], [F.col("cos").desc(), F.col("cand_id")], k=TOP_K)
         .select("query_id", "cand_id", stable_round4(F.col("cos")).alias("cosine_sim"))
     )
 
@@ -543,8 +536,7 @@ def _lsh_rerank(e: DataFrame, bands: DataFrame, qb: DataFrame) -> DataFrame:
         F.col("embedding").alias("c_emb"),
         vec_norm(F.col("embedding")).alias("c_n"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
+    scored = (
         pairs.join(F.broadcast(eq), "query_id")
         .join(ec, "cand_id")
         .select(
@@ -555,12 +547,10 @@ def _lsh_rerank(e: DataFrame, bands: DataFrame, qb: DataFrame) -> DataFrame:
                 / (F.col("q_n") * F.col("c_n"))
             ).alias("cos"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id", "cand_id", stable_round4(F.col("cos")).alias("cosine_sim")
-        )
     )
+    return top_k(
+        scored, ["query_id"], [F.col("cos").desc(), F.col("cand_id")], k=TOP_K
+    ).select("query_id", "cand_id", stable_round4(F.col("cos")).alias("cosine_sim"))
 
 
 @register(
@@ -1023,14 +1013,12 @@ def pq_codebook(e: DataFrame, pos: DataFrame) -> DataFrame:
     # pick was a row_number window over the ×PQ_K-expanded per-subvector
     # distance relation — a fact-scaled Sort+Exchange+Sort tower (even
     # with WindowGroupLimit's partial top-1, every task sorts its slice).
-    # argmin by (d0 ASC, code ASC) IS min(d0 * PQ_K + code) for integer
-    # d0 ≥ 0 and code ∈ [0, PQ_K): d1 < d2 ⇒ d1·K + (K−1) < d2·K, and
-    # equal d ties break on the smaller code — the window's exact pick.
-    # The packed min is LONG-safe with 4 extra bits on top of d0, whose
-    # own long-sum headroom (Σ₈ diff², diff = 2·10⁶·|v|) already assumes
-    # |v| ≲ 500; packing tightens that to |v| ≲ 130 — two orders above
-    # any unit-ish embedding. Two-level HashAggregate, zero sorts; the
-    # same rewrite applies in pq_encode below.
+    # argmin by (d0 ASC, code ASC) is packed_argmin(d0, code, PQ_K)
+    # (operators/topk.py). The packed min is LONG-safe with 4 extra bits
+    # on top of d0, whose own long-sum headroom (Σ₈ diff², diff =
+    # 2·10⁶·|v|) already assumes |v| ≲ 500; packing tightens that to
+    # |v| ≲ 130 — two orders above any unit-ish embedding. Two-level
+    # HashAggregate, zero sorts; the same rewrite applies in pq_encode.
     assign0 = (
         pos.join(F.broadcast(seeds), "p")
         .groupBy("vec_id", sub, "code")
@@ -1040,8 +1028,10 @@ def pq_codebook(e: DataFrame, pos: DataFrame) -> DataFrame:
             ).alias("d0")
         )
         .groupBy("vec_id", "sub")
-        .agg(F.min(F.col("d0") * PQ_K + F.col("code")).alias("pk"))
-        .select("vec_id", "sub", (F.col("pk") % PQ_K).cast("int").alias("code"))
+        .agg(packed_argmin(F.col("d0"), F.col("code"), PQ_K).alias("pk"))
+        .select(
+            "vec_id", "sub", packed_idx(F.col("pk"), PQ_K).cast("int").alias("code")
+        )
     )
     return (
         pos.join(
@@ -1064,24 +1054,23 @@ def pq_encode(pos: DataFrame, cb: DataFrame) -> DataFrame:
     sub = F.floor(F.col("p") / PQ_SUB_DIM).cast("long").alias("sub")
     diff = F.col("vs") - F.col("ms")
     # Round-11: packed-long argmin instead of the row_number window —
-    # min(dist * PQ_K + code) is the window's exact (dist ASC, code ASC)
-    # top-1 for integer dist ≥ 0, code ∈ [0, PQ_K); both dist and code
-    # unpack exactly (code = pk mod K, dist = pk div K, both
-    # non-negative). See pq_codebook.assign0 for the overflow headroom
+    # the window's exact (dist ASC, code ASC) top-1; both dist and code
+    # unpack exactly. See pq_codebook.assign0 for the overflow headroom
     # argument. Plan: two-level HashAggregate with map-side combine on
     # both levels, zero Sort/Window nodes (before: Sort+Exchange+Sort+
     # WindowGroupLimit over the ×PQ_K-expanded relation).
+    pk = F.col("pk")
     return (
         pos.join(F.broadcast(cb), "p")
         .groupBy("vec_id", sub, "code")
         .agg(F.sum(diff * diff).alias("dist"))
         .groupBy("vec_id", "sub")
-        .agg(F.min(F.col("dist") * PQ_K + F.col("code")).alias("pk"))
+        .agg(packed_argmin(F.col("dist"), F.col("code"), PQ_K).alias("pk"))
         .select(
             "vec_id",
             "sub",
-            (F.col("pk") % PQ_K).cast("int").alias("code"),
-            F.expr(f"pk DIV {PQ_K}").alias("dist"),
+            packed_idx(pk, PQ_K).cast("int").alias("code"),
+            packed_score(pk, PQ_K).alias("dist"),
         )
     )
 
@@ -1198,20 +1187,16 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    wprobe = W.partitionBy("query_id").orderBy(
-        F.col("cent_cos").desc(), F.col("label")
-    )
-    probed = (
-        q.join(F.broadcast(cents))
-        .select(
+    probed = top_k(
+        q.join(F.broadcast(cents)).select(
             "query_id",
             "label",
             cosine(F.col("q_emb"), F.col("centroid")).alias("cent_cos"),
-        )
-        .withColumn("rn", F.row_number().over(wprobe))
-        .filter(F.col("rn") <= IVFPQ_NPROBE)
-        .select("query_id", "label")
-    )
+        ),
+        ["query_id"],
+        [F.col("cent_cos").desc(), F.col("label")],
+        k=IVFPQ_NPROBE,
+    ).select("query_id", "label")
     sub = F.floor(F.col("p") / PQ_SUB_DIM).cast("long").alias("sub")
     diff = F.col("vs") - F.col("ms")
     lut = (
@@ -1234,13 +1219,13 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(enc, enc["vec_id"] == F.col("cand_id"))
         .select("query_id", "cand_id", "sub", "code")
     )
-    wtop = W.partitionBy("query_id").orderBy("adc_dist_scaled", "cand_id")
-    return (
+    adc = (
         cand.join(F.broadcast(lut), ["query_id", "sub", "code"])
         .groupBy("query_id", "cand_id")
         .agg(F.sum("d").alias("adc_dist_scaled"))
-        .withColumn("rn", F.row_number().over(wtop))
-        .filter(F.col("rn") <= TOP_K)
+    )
+    return (
+        top_k(adc, ["query_id"], ["adc_dist_scaled", "cand_id"], k=TOP_K)
         .select(
             "query_id",
             "cand_id",
@@ -1781,24 +1766,13 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("q_n") * F.col("c_n"))
         ).alias("cos"),
     )
-    rn = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.col("cos").desc(), "cand_id")
-    )
     votes = (
-        scored.withColumn("rn", rn)
-        .filter(F.col("rn") <= KNN_K)
+        top_k(scored, ["query_id"], [F.col("cos").desc(), "cand_id"], k=KNN_K)
         .groupBy("query_id", "true_label", "c_label")
         .agg(F.count(F.lit(1)).alias("n_votes"))
     )
-    best = votes.withColumn(
-        "vr",
-        F.row_number().over(
-            W.partitionBy("query_id").orderBy(
-                F.col("n_votes").desc(), "c_label"
-            )
-        ),
-    )
-    return best.filter(F.col("vr") == 1).select(
+    best = top_k(votes, ["query_id"], [F.col("n_votes").desc(), "c_label"])
+    return best.select(
         "query_id",
         F.col("true_label").cast("long").alias("true_label"),
         F.col("c_label").cast("long").alias("pred_label"),
@@ -1875,17 +1849,14 @@ def sim_search_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = norms.select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("cand_id"))
+    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id")).select(
+        "query_id",
+        "cand_id",
+        dot_double(F.col("q_emb"), F.col("c_emb")).alias("dot"),
+        "qn",
+    )
     return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            dot_double(F.col("q_emb"), F.col("c_emb")).alias("dot"),
-            "qn",
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
+        top_k(scored, ["query_id"], [F.col("dot").desc(), F.col("cand_id")], k=TOP_K)
         .crossJoin(F.broadcast(mx))
         .select(
             "query_id",
@@ -2102,10 +2073,8 @@ def dedup_embedding_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e"),
         "cos",
     ).select("e.src", "e.dst", "cos")
-    w = W.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
-    kept = (
-        edges.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= EMBDUP_TOPK_CAP)
+    kept = top_k(
+        edges, ["src"], [F.col("cos").desc(), F.col("dst")], k=EMBDUP_TOPK_CAP
     )
     return kept.select(
         F.least("src", "dst").alias("vec1"),
@@ -2394,22 +2363,15 @@ def llm_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
 
-    def argmax(df, score, keep):
-        w = W.partitionBy("qid").orderBy(F.col(score).desc(), F.col("cid"))
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("qid", *keep)
-        )
-
-    s1 = argmax(
+    s1 = top_k(
         cand.withColumn("mmr", F.col("rel")),
-        "rel",
-        [
-            F.col("cid").alias("cid1"),
-            F.col("cemb").alias("emb1"),
-            F.col("rel").alias("rel1"),
-        ],
+        ["qid"],
+        [F.col("rel").desc(), F.col("cid")],
+    ).select(
+        "qid",
+        F.col("cid").alias("cid1"),
+        F.col("cemb").alias("emb1"),
+        F.col("rel").alias("rel1"),
     )
     m2 = (
         cand.join(F.broadcast(s1), "qid")
@@ -2421,15 +2383,12 @@ def llm_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    s2 = argmax(
-        m2,
-        "mmr",
-        [
-            F.col("cid").alias("cid2"),
-            F.col("cemb").alias("emb2"),
-            F.col("rel").alias("rel2"),
-            F.col("mmr").alias("mmr2"),
-        ],
+    s2 = top_k(m2, ["qid"], [F.col("mmr").desc(), F.col("cid")]).select(
+        "qid",
+        F.col("cid").alias("cid2"),
+        F.col("cemb").alias("emb2"),
+        F.col("rel").alias("rel2"),
+        F.col("mmr").alias("mmr2"),
     )
     m3 = (
         m2.join(F.broadcast(s1.select("qid", "emb1")), "qid")
@@ -2446,14 +2405,11 @@ def llm_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mmr"),
         )
     )
-    s3 = argmax(
-        m3,
-        "mmr",
-        [
-            F.col("cid").alias("cid3"),
-            F.col("rel").alias("rel3"),
-            F.col("mmr").alias("mmr3"),
-        ],
+    s3 = top_k(m3, ["qid"], [F.col("mmr").desc(), F.col("cid")]).select(
+        "qid",
+        F.col("cid").alias("cid3"),
+        F.col("rel").alias("rel3"),
+        F.col("mmr").alias("mmr3"),
     )
     out = (
         s1.select(

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..registry import register
 from ..tables import load
+from .topk import top_k
 
 
 def grid_cells(xmin: Column, ymin: Column, xmax: Column, ymax: Column, cell: float):
@@ -449,17 +450,14 @@ def join_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist2 = (F.col("px") - F.col("cx")) * (F.col("px") - F.col("cx")) + (
         F.col("py") - F.col("cy")
     ) * (F.col("py") - F.col("cy"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("probe_id").orderBy("dist2", "cand_id")
-    return (
+    near = (
         probes.join(cands, ["gx", "gy"])
         .filter(F.col("probe_id") != F.col("cand_id"))
         .select("probe_id", "cand_id", dist2.alias("dist2"))
         .filter(F.col("dist2") <= KNN_RADIUS * KNN_RADIUS)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KNN_K)
-        .select("probe_id", "cand_id", "dist2")
+    )
+    return top_k(near, ["probe_id"], ["dist2", "cand_id"], k=KNN_K).select(
+        "probe_id", "cand_id", "dist2"
     )
 
 

@@ -49,6 +49,7 @@ from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
 from .dedup import SQL_SHINGLES, sql_stable_round4, stable_round4, tokens
+from .topk import packed_argmin, packed_idx, top_k
 
 # --------------------------------------------------------------------------
 # agg_kmv_sketch
@@ -145,17 +146,13 @@ def agg_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global bottom-k — and level 2 sorts only the <= k * n_parts
     # survivors per type. This IS the sketch's distributed-accumulator
     # property, now also the execution shape.
-    lvl1 = hv.withColumn("pid", F.spark_partition_id()).withColumn(
-        "rk1",
-        F.row_number().over(
-            W.partitionBy("event_type", "pid").orderBy("hv")
-        ),
-    ).filter(F.col("rk1") <= KMV_K)
-    ranked = lvl1.withColumn(
-        "rk",
-        F.row_number().over(W.partitionBy("event_type").orderBy("hv")),
+    lvl1 = top_k(
+        hv.withColumn("pid", F.spark_partition_id()),
+        ["event_type", "pid"],
+        ["hv"],
+        k=KMV_K,
     )
-    sk = ranked.filter(F.col("rk") <= KMV_K)
+    sk = top_k(lvl1, ["event_type"], ["hv"], k=KMV_K)
     ex = du.groupBy("event_type").agg(
         F.count("*").alias("exact_distinct")
     )
@@ -168,10 +165,7 @@ def agg_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "exact_distinct", "kmv_estimate")
     )
     usk = sk.select("hv").distinct()
-    uranked = usk.withColumn(
-        "rk", F.row_number().over(W.partitionBy().orderBy("hv"))
-    )
-    ukt = uranked.filter(F.col("rk") <= KMV_K).agg(
+    ukt = top_k(usk, [], ["hv"], k=KMV_K).agg(
         F.max("hv").alias("kth"), F.count("*").alias("kn")
     )
     uex = du.agg(F.countDistinct("user_id").alias("exact_distinct"))
@@ -420,20 +414,14 @@ def join_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tw = toks.join(dfreq, "tok")
     # Rare-first total order per doc via a window — fully relational, no
     # collect_list arrays to build, carry through joins, or intersect.
-    ranked = tw.select(
-        "doc_id",
-        "tok",
-        F.row_number()
-        .over(W.partitionBy("doc_id").orderBy("df", "tok"))
-        .alias("pos"),
-        "n",
-    )
-    prefix = ranked.filter(
-        F.col("pos")
-        <= F.col("n")
-        - F.floor((F.col("n") + 1) / SS_DEN).cast("int")
-        + 1
-    )
+    n = F.col("n")
+    prefix = top_k(
+        tw.select("doc_id", "tok", "n", "df"),
+        ["doc_id"],
+        ["df", "tok"],
+        k=n - F.floor((n + 1) / SS_DEN).cast("int") + 1,
+        rank_col="pos",
+    ).select("doc_id", "tok", "pos", "n")
     # Candidate join with BOTH PPJoin prunes in the join condition:
     # - length filter: J <= min(n)/max(n), so J >= 1/2 needs
     #   2*min(na,nb) >= max(na,nb);
@@ -979,8 +967,8 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idx = |{langs ≤ cand}| via a |langs|² self-join count (the
     # rank()-ties-share spelling from the round-10 sweep; langs are
     # distinct so count == rank). Bounded: |langs| is the language
-    # alphabet, never data-scaled. idx ≤ 256 is asserted below (packing
-    # reserves 8 bits).
+    # alphabet, never data-scaled. The packing reserves 8 bits; the
+    # argmin asserts idx ∈ [0, 256) on every packed row.
     from .ckpt import pin
 
     # The rank map feeds TWO branches (the scores crossjoin and the
@@ -1000,16 +988,7 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
         _langs.join(F.broadcast(_lc2), F.col("cand2") <= F.col("cand"))
         .groupBy("cand")
         .agg(F.count(F.lit(1)).alias("idx"))
-        .select(
-            "cand",
-            F.coalesce(
-                F.assert_true(
-                    F.col("idx") <= 256,
-                    F.lit("nb packed argmax: >256 languages"),
-                ).cast("long"),
-                F.col("idx") - 1,
-            ).alias("idx"),
-        )
+        .select("cand", (F.col("idx") - 1).alias("idx"))
     )
     lang_idx = lang_consts.join(F.broadcast(lang_rank), "cand")
     scores = (
@@ -1029,10 +1008,10 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # argmax as min over ONE packed LONG (round-11, VERDICT r10 #8):
-    # packed = (-s) * 256 + idx is lexicographic (-s ASC, idx ASC) for
-    # idx ∈ [0, 256) — i.e. highest s, then smallest cand (idx is the
-    # ascending lang rank), exactly the old min(struct(-s, cand)) and the
-    # oracle's row_number(ORDER BY s DESC, cand). A LONG min is
+    # packed_argmin(-s, idx, 256) is lexicographic (-s ASC, idx ASC) —
+    # i.e. highest s, then smallest cand (idx is the ascending lang
+    # rank), exactly the old min(struct(-s, cand)) and the oracle's
+    # row_number(ORDER BY s DESC, cand). A LONG min is
     # HashAggregate-mutable where the struct min planned as a
     # SortAggregate pair around the exchange (partial sorted-agg per
     # task). Headroom: |s| ≤ pq + tot·|dq| + |psum| ≲ 1e14 for 1e6
@@ -1048,12 +1027,12 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers that join on doc_id alone — drain-measured flat at 10×,
     # vs a per-task sort of the docs×langs stream saved here.
     pred = scores.groupBy("doc_id", "lang_true").agg(
-        F.min((-F.col("s")) * 256 + F.col("idx")).alias("pk"),
+        packed_argmin(-F.col("s"), F.col("idx"), 256).alias("pk"),
     )
     return pred.select(
         "doc_id",
         "lang_true",
-        F.pmod(F.col("pk"), F.lit(256)).alias("idx"),
+        packed_idx(F.col("pk"), 256).alias("idx"),
     ).join(
         F.broadcast(lang_rank), "idx"
     ).select(

@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4
+from .topk import top_k
 
 # --------------------------------------------------------------------------
 # ml_auc_roc
@@ -285,12 +286,9 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("tp", "tq").alias("baseline_errors"),
         (F.col("tp") + F.col("tq")).alias("n_tot"),
     )
-    rk = sc.withColumn(
-        "rk",
-        F.row_number().over(
-            W.partitionBy("feature").orderBy("errors", "threshold")
-        ),
-    ).filter(F.col("rk") <= STUMP_TOPK)
+    rk = top_k(
+        sc, ["feature"], ["errors", "threshold"], k=STUMP_TOPK, rank_col="rk"
+    )
     return rk.select(
         "feature",
         F.col("rk").cast("int"),
@@ -1000,14 +998,13 @@ def rec_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosv"),
         )
     )
-    rk = sc.withColumn(
-        "rk",
-        F.row_number().over(
-            W.partitionBy("pa").orderBy(
-                F.col("cosv").desc(), F.col("cij").desc(), F.col("pb")
-            )
-        ),
-    ).filter(F.col("rk") <= REC_TOPK)
+    rk = top_k(
+        sc,
+        ["pa"],
+        [F.col("cosv").desc(), F.col("cij").desc(), F.col("pb")],
+        k=REC_TOPK,
+        rank_col="rk",
+    )
     return rk.select(
         F.col("pa").cast("long").alias("part"),
         F.col("rk").cast("int"),

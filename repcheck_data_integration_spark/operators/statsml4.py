@@ -53,6 +53,7 @@ from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load, load_bucketed
 from .dedup import sql_stable_round4
+from .topk import top_k
 from .statsml import _DET, _DET0, _DET1, _DET2
 
 # --------------------------------------------------------------------------
@@ -555,12 +556,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     g = cand.withColumn("w2", F.col("w") * F.col("w"))
-    rk = g.withColumn(
-        "rk",
-        F.row_number().over(
-            W.orderBy(F.expr(_CP_GAIN).desc(), F.col("t"))
-        ),
-    ).filter(F.col("rk") == 1)
+    rk = top_k(g, [], [F.expr(_CP_GAIN).desc(), F.col("t")])
     return rk.selectExpr(
         "CAST(n AS BIGINT) AS n_days",
         "CAST(t AS BIGINT) AS split_idx",
@@ -715,12 +711,9 @@ def rec_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     score = (F.col("num").cast("double") / F.col("den").cast("double"))
-    rk = cand.withColumn(
-        "rk",
-        F.row_number().over(
-            W.partitionBy("u").orderBy(score.desc(), F.col("pj"))
-        ),
-    ).filter(F.col("rk") <= SLOPE1_TOPK)
+    rk = top_k(
+        cand, ["u"], [score.desc(), F.col("pj")], k=SLOPE1_TOPK, rank_col="rk"
+    )
     return rk.select(
         F.col("u").cast("long").alias("cust"),
         F.col("rk").cast("int"),

@@ -49,6 +49,7 @@ from ..functions.exact import scaled_long
 from ..tables import load
 from .ckpt import pin
 from .dedup import sql_stable_round4
+from .topk import top_k
 
 # --------------------------------------------------------------------------
 # ml_spearman_corr
@@ -823,16 +824,7 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mr"),
             F.expr(_BS_KEY).alias("gain"),
         )
-        return (
-            scored.withColumn(
-                "rk",
-                F.row_number().over(
-                    W.orderBy(F.col("gain").desc(), F.col("split_v"))
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .drop("rk")
-        )
+        return top_k(scored, [], [F.col("gain").desc(), F.col("split_v")])
 
     s1 = stage(vl, "sv")
     res = vl.crossJoin(F.broadcast(s1.select("split_v", "ml", "mr"))).select(
@@ -1532,12 +1524,7 @@ def ts_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = num.crossJoin(F.broadcast(den)).select(
         "l", "nn", "dd", F.expr(_DP_Q).alias("aq")
     )
-    best = q.withColumn(
-        "rn",
-        F.row_number().over(
-            W.orderBy(F.col("aq").desc(), F.col("l"))
-        ),
-    ).filter(F.col("rn") == 1)
+    best = top_k(q, [], [F.col("aq").desc(), F.col("l")])
     return best.crossJoin(
         F.broadcast(st.select(F.col("n").cast("long").alias("n")))
     ).selectExpr(
@@ -2559,18 +2546,11 @@ def events_gesd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("x").alias("sx"),
             F.sum(F.col("x") * F.col("x")).alias("sxx"),
         )
+        dev = remaining.crossJoin(F.broadcast(st)).withColumn(
+            "adev", F.abs(F.col("n") * F.col("x") - F.col("sx"))
+        )
         m = (
-            remaining.crossJoin(F.broadcast(st))
-            .withColumn(
-                "adev", F.abs(F.col("n") * F.col("x") - F.col("sx"))
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    W.orderBy(F.col("adev").desc(), F.col("idx"))
-                ),
-            )
-            .filter(F.col("rn") == 1)
+            top_k(dev, [], [F.col("adev").desc(), F.col("idx")])
             .select(
                 F.lit(k).alias("round"),
                 F.col("idx"),

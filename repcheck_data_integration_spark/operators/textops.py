@@ -30,6 +30,7 @@ from ..registry import register
 from ..tables import literal_frame, load
 from .ckpt import pin
 from .dedup import TOKEN_RE, sql_stable_round4, stable_round4, tokens
+from .topk import top_k
 
 EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
 PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
@@ -206,12 +207,13 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TFIDF_TOP)
-        .select("doc_id", "term", "tfidf", F.col("rn").cast("int").alias("rk"))
-    )
+    return top_k(
+        scored,
+        ["doc_id"],
+        [F.col("tfidf").desc(), F.col("term")],
+        k=TFIDF_TOP,
+        rank_col="rn",
+    ).select("doc_id", "term", "tfidf", F.col("rn").cast("int").alias("rk"))
 
 
 VOCAB_TOP = 100
@@ -244,10 +246,14 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = tc.groupBy(F.col("tok").alias("term")).agg(
         F.sum("cnt").alias("total_count"), F.count(F.lit(1)).alias("doc_freq")
     )
-    w = W.orderBy(F.col("total_count").desc(), F.col("term"))
     return (
-        v.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= VOCAB_TOP)
+        top_k(
+            v,
+            [],
+            [F.col("total_count").desc(), F.col("term")],
+            k=VOCAB_TOP,
+            rank_col="rn",
+        )
         .select(
             F.col("rn").cast("int").alias("rank"),
             "term",
@@ -334,15 +340,10 @@ def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    wbest = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("tok"))
-    best = (
-        scored.withColumn("rn", F.row_number().over(wbest))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            F.col("tok").alias("top_term"),
-            F.col("tfidf").alias("top_tfidf"),
-        )
+    best = top_k(scored, ["doc_id"], [F.col("tfidf").desc(), F.col("tok")]).select(
+        "doc_id",
+        F.col("tok").alias("top_term"),
+        F.col("tfidf").alias("top_tfidf"),
     )
     canon = (
         d.join(kept, "doc_id", "left_semi")
@@ -1543,12 +1544,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = bucketed.groupBy("j", "bucket").agg(
         F.sum("exact_count").alias("cnt")
     )
-    topw = W.orderBy(F.col("exact_count").desc(), F.col("word"))
-    top = (
-        exact.withColumn("rn", F.row_number().over(topw))
-        .filter(F.col("rn") <= 20)
-        .drop("rn")
-    )
+    top = top_k(exact, [], [F.col("exact_count").desc(), F.col("word")], k=20)
     probes = top.select(
         "word", "exact_count", j_col
     ).select(
@@ -2344,17 +2340,13 @@ def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nd))
         .withColumn("pmi_q", F.expr(_PMI_Q))
     )
-    rk = sc.withColumn(
-        "rk",
-        F.row_number().over(
-            W.orderBy(
-                F.col("pmi_q").desc(),
-                F.col("cxy").desc(),
-                "tok_a",
-                "tok_b",
-            )
-        ),
-    ).filter(F.col("rk") <= PMI_TOPK)
+    rk = top_k(
+        sc,
+        [],
+        [F.col("pmi_q").desc(), F.col("cxy").desc(), "tok_a", "tok_b"],
+        k=PMI_TOPK,
+        rank_col="rk",
+    )
     return rk.select(
         F.col("rk").cast("int"),
         "tok_a",
@@ -2510,10 +2502,8 @@ def text_keyphrase_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.expr(f"({TR_DAMP_NUM} * contrib) div {TR_DAMP_DEN}")
             ).alias("r"),
         )
-    w = W.orderBy(F.col("r").desc(), F.col("node"))
     return (
-        ranks.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TR_TOP)
+        top_k(ranks, [], [F.col("r").desc(), F.col("node")], k=TR_TOP, rank_col="rk")
         .select(
             F.col("rk").cast("int").alias("rk"),
             F.col("node").alias("keyword"),

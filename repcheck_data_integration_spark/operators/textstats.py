@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4, tokens
+from .topk import top_k
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _SW_SQL = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
@@ -1323,31 +1324,16 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
     )
-    from pyspark.sql import Window as _W
-
     # Two-level top-k (the agg_kmv_sketch shape): a bare global window
     # would serialize the whole vocabulary through one sort task. Level 1
     # prunes to ZIPF_TOP rows per physical partition IN PARALLEL under
     # the same total order (top-k is mergeable), level 2 ranks only the
     # <= ZIPF_TOP * n_parts survivors.
-    lvl1 = (
-        tc.withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "rk1",
-            F.row_number().over(
-                _W.partitionBy("pid").orderBy(
-                    F.col("cnt").desc(), F.col("tok")
-                )
-            ),
-        )
-        .filter(F.col("rk1") <= ZIPF_TOP)
+    order = [F.col("cnt").desc(), F.col("tok")]
+    lvl1 = top_k(
+        tc.withColumn("pid", F.spark_partition_id()), ["pid"], order, k=ZIPF_TOP
     )
-    rk = lvl1.select(
-        "cnt",
-        F.row_number()
-        .over(_W.orderBy(F.col("cnt").desc(), F.col("tok")))
-        .alias("r"),
-    ).filter(F.col("r") <= ZIPF_TOP)
+    rk = top_k(lvl1.select("cnt", "tok"), [], order, k=ZIPF_TOP, rank_col="r")
     pts = rk.select(
         F.floor(F.log(F.col("r")) * ZIPF_LN_SCALE)
         .cast("long")
@@ -1581,8 +1567,6 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order, then the global rank over <= {BURST_TOPK} * n_parts
     survivors) — no full-vocabulary single-task sort.
     """
-    from pyspark.sql import Window as _W
-
     d = load(spark, sf_dir, "documents")
     dt = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     tc = dt.groupBy("doc_id", "tok").agg(
@@ -1597,19 +1581,11 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     f = ts.filter(F.col("df") >= BURST_MIN_DF)
     key = F.col("stf") / F.col("df")
-    lvl1 = (
-        f.withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "rk1",
-            F.row_number().over(
-                _W.partitionBy("pid").orderBy(key.desc(), F.col("tok"))
-            ),
-        )
-        .filter(F.col("rk1") <= BURST_TOPK)
+    order = [key.desc(), F.col("tok")]
+    lvl1 = top_k(
+        f.withColumn("pid", F.spark_partition_id()), ["pid"], order, k=BURST_TOPK
     )
-    rk = lvl1.withColumn(
-        "rk", F.row_number().over(_W.orderBy(key.desc(), F.col("tok")))
-    ).filter(F.col("rk") <= BURST_TOPK)
+    rk = top_k(lvl1, [], order, k=BURST_TOPK, rank_col="rk")
     return rk.selectExpr(
         "CAST(rk AS INT) AS rk",
         "tok AS term",

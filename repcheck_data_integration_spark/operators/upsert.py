@@ -20,26 +20,15 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
+from .topk import top_k
 
 SRC_MARK = "__src_present"
-
-
-def dedup_last_writer(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column]
-) -> DataFrame:
-    """Keep the winning row per key (win_latest_version mechanism)."""
-    w = W.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def merge_upsert(
@@ -112,7 +101,7 @@ def merge_upsert(
     if not order:  # key-only table: any duplicate row is identical
         order = [F.col(keys[0])]
     # dedup before projecting so version columns are still visible
-    src = dedup_last_writer(source, keys, order).select(*cols)
+    src = top_k(source, keys, order).select(*cols)
 
     src = src.select(
         *[F.col(c).alias(c if c in keys else f"__s_{c}") for c in cols],

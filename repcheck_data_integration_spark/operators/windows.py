@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
+from .topk import top_k
 
 
 @register(
@@ -31,14 +32,9 @@ def win_top1_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best-candidate-by-score selection (vote_matching.py:160-168
     process.extractOne) as a top-1 window."""
     o = load(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    )
+    return top_k(
+        o, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey")]
+    ).select("o_custkey", "o_orderkey", "o_totalprice")
 
 
 @register(
@@ -67,15 +63,15 @@ def win_current_role(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("o_orderstatus") == "P", 2)
         .otherwise(1)
     )
-    w = W.partitionBy("o_custkey").orderBy(
-        F.col("role_score").desc(), F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    return (
-        o.withColumn("role_score", score)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_orderstatus", "role_score")
-    )
+    return top_k(
+        o.withColumn("role_score", score),
+        ["o_custkey"],
+        [
+            F.col("role_score").desc(),
+            F.col("o_orderdate").desc(),
+            F.col("o_orderkey").desc(),
+        ],
+    ).select("o_custkey", "o_orderkey", "o_orderstatus", "role_score")
 
 
 @register(
@@ -95,17 +91,10 @@ def win_latest_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not unique per order in the fixture, so the full tie-break chain
     makes the pick deterministic."""
     li = load(spark, sf_dir, "lineitem")
-    w = W.partitionBy("l_orderkey").orderBy(
-        F.col("l_linenumber").desc(),
-        F.col("l_partkey").desc(),
-        F.col("l_suppkey").desc(),
-        F.col("l_quantity").desc(),
-    )
-    return (
-        li.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-    )
+    order = ["l_linenumber", "l_partkey", "l_suppkey", "l_quantity"]
+    return top_k(
+        li, ["l_orderkey"], [F.col(c).desc() for c in order]
+    ).select("l_orderkey", "l_linenumber", "l_quantity")
 
 
 @register(

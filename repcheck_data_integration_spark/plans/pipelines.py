@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.kernels import keep_digits, normalize_division_id, uuid5
 from ..operators.resolve import resolve_entities
 from ..operators.spatial import bbox_grid_join, st_intersects
+from ..operators.topk import top_k
 from ..operators.upsert import merge_upsert
 
 
@@ -198,16 +199,16 @@ def current_roles(people_raw: DataFrame, as_of: str) -> DataFrame:
         .when(start.isNotNull() & end.isNull() & (start <= asof), 1)
         .otherwise(0)
     )
-    w = W.partitionBy("id").orderBy(
-        F.col("role_score").desc(),
-        F.col("role_start").desc_nulls_last(),
-        F.col("role.district"),
-    )
     return (
-        r.withColumn("role_score", score)
-        .withColumn("role_start", start)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        top_k(
+            r.withColumn("role_score", score).withColumn("role_start", start),
+            ["id"],
+            [
+                F.col("role_score").desc(),
+                F.col("role_start").desc_nulls_last(),
+                F.col("role.district"),
+            ],
+        )
         .select(
             "id",
             F.col("role.type").alias("role_type"),

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..operators.topk import top_k
 from ..tables import load
 
 TUMBLE_S = 600
@@ -425,17 +426,13 @@ def stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    from pyspark.sql import Window
-
-    rk = F.row_number().over(
-        Window.partitionBy("window_start").orderBy(
-            F.col("n_events").desc(), F.col("event_type").asc()
-        )
-    )
-    return (
-        counts.withColumn("rank_in_window", rk.cast("long"))
-        .filter(F.col("rank_in_window") <= TOPK_PER_WINDOW)
-    )
+    return top_k(
+        counts,
+        ["window_start"],
+        [F.col("n_events").desc(), F.col("event_type").asc()],
+        k=TOPK_PER_WINDOW,
+        rank_col="rank_in_window",
+    ).withColumn("rank_in_window", F.col("rank_in_window").cast("long"))
 
 
 @register(
@@ -533,12 +530,9 @@ def events_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = s.groupBy(path.alias("path")).agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )
-    wr = W.orderBy(F.col("n_occurrences").desc(), F.col("path"))
-    return (
-        g.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= TOPK_PATHS)
-        .select("path", "n_occurrences")
-    )
+    return top_k(
+        g, [], [F.col("n_occurrences").desc(), F.col("path")], k=TOPK_PATHS
+    ).select("path", "n_occurrences")
 
 
 SPIKE_TRAIL = 3  # trailing hours in the baseline window

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.exact import scaled_long
+from ..operators.topk import top_k
 from ..operators.upsert import merge_upsert
 
 EVENTS_SCHEMA = (
@@ -467,8 +468,6 @@ def make_scd2_merge_batch(
     from ..operators.temporal import scd2_apply
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window as W
-
         if epoch_id <= rollup_applied_epoch(target_path, run_id):
             return  # replayed epoch already folded in
         spark = batch.sparkSession
@@ -477,14 +476,11 @@ def make_scd2_merge_batch(
         # LATEST effective state (intermediate same-batch states are
         # skipped, like any snapshot-based CDC fold); deterministic
         # tie-break through the compare columns
-        w = W.partitionBy(key).orderBy(
-            F.col(effective_col).desc(),
-            *[F.col(c).desc_nulls_last() for c in compare_cols],
-        )
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        latest = top_k(
+            batch,
+            [key],
+            [F.col(effective_col).desc()]
+            + [F.col(c).desc_nulls_last() for c in compare_cols],
         )
         new_dim = scd2_apply(
             dim, latest, key=key, effective_col=effective_col,

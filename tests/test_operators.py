@@ -190,6 +190,70 @@ def test_merge_upsert_rejects_null_keys(spark):
         merge_upsert(target, source, keys=["id"], preserve=()).collect()
 
 
+_TOPK_ROWS = [
+    # group a: tie on s=3 broken by the order tail (id)
+    ("a", 3, 1),
+    ("a", 3, 0),
+    ("a", 1, 2),
+    # group b: NULL order keys
+    ("b", None, 5),
+    ("b", 2, 6),
+    ("b", None, 4),
+    # group c: one row, smaller than any k > 1
+    ("c", 7, 9),
+]
+
+
+def test_top_k_matches_hand_rolled_window(spark):
+    """top_k is exactly row_number() OVER (PARTITION BY by ORDER BY order)
+    filtered to rank 1 / rank <= k, for every NULL placement Spark offers
+    (desc defaults to NULLS LAST, asc to NULLS FIRST)."""
+    from pyspark.sql import Window
+
+    from repcheck_data_integration_spark.operators.topk import top_k
+
+    df = spark.createDataFrame(_TOPK_ROWS, "g string, s int, id int")
+    orders = [
+        [F.col("s").desc(), "id"],
+        [F.col("s").asc(), "id"],
+        [F.col("s").desc_nulls_first(), F.col("id").desc()],
+    ]
+    for order in orders:
+        w = Window.partitionBy("g").orderBy(*order)
+        for k in (1, 2, 5):
+            want = (
+                df.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") <= k)
+                .drop("rn")
+            )
+            got = top_k(df, ["g"], order, k=k)
+            assert got.columns == df.columns
+            assert set(got.collect()) == set(want.collect())
+    top1 = {r["g"]: r["id"] for r in top_k(df, ["g"], [F.col("s").desc(), "id"]).collect()}
+    assert top1 == {"a": 0, "b": 6, "c": 9}
+    first = {r["g"]: r["id"] for r in top_k(df, ["g"], ["s", "id"]).collect()}
+    assert first == {"a": 2, "b": 4, "c": 9}  # asc puts NULLs first
+    # k larger than every group keeps each group whole
+    assert top_k(df, ["g"], ["s", "id"], k=10).count() == len(_TOPK_ROWS)
+
+
+def test_top_k_empty_global_and_kept_rank(spark):
+    from pyspark.sql import types as T
+
+    from repcheck_data_integration_spark.operators.topk import top_k
+
+    df = spark.createDataFrame(_TOPK_ROWS, "g string, s int, id int")
+    assert top_k(df.limit(0), ["g"], ["s"], k=3).collect() == []
+    # no `by`: one global ranking
+    glob = top_k(df, [], [F.col("s").desc(), "id"], k=2)
+    assert [r["id"] for r in glob.orderBy(F.col("s").desc(), "id").collect()] == [9, 0]
+    kept = top_k(df, ["g"], [F.col("s").desc(), "id"], k=2, rank_col="r")
+    assert kept.schema["r"].dataType == T.IntegerType()
+    assert {(r["id"], r["r"]) for r in kept.collect()} == {
+        (0, 1), (1, 2), (6, 1), (4, 2), (9, 1)
+    }
+
+
 def test_connected_components_known_clusters(spark):
     from repcheck_data_integration_spark.operators.dedup import connected_components
 

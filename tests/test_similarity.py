@@ -181,3 +181,22 @@ def test_vec_norm_factored_cosine_is_bit_identical(spark):
         ).alias("diff")
     ).filter(F.col("diff")).count()
     assert mism == 0
+
+
+def test_pq_encode_rejects_code_outside_packing_domain(spark):
+    """pq_encode packs (dist, code) into one LONG; a codebook code of
+    PQ_K would alias the next distance, so the encode fails in-plan
+    instead of returning a wrong code."""
+    import pytest
+
+    from repcheck_data_integration_spark.operators.similarity import (
+        PQ_K,
+        pq_encode,
+    )
+
+    pos = spark.createDataFrame([(0, 0, 10)], "vec_id long, p int, vs long")
+    cb = spark.createDataFrame(
+        [(0, 0, 5), (PQ_K, 0, 9)], "code int, p int, ms long"
+    )
+    with pytest.raises(Exception, match="packed_argmin"):
+        pq_encode(pos, cb).collect()

@@ -264,8 +264,18 @@ def test_nb_packed_argmax_matches_struct_argmax(spark):
     struct-min — i.e. highest s wins, ties to the smallest idx — at
     adversarial magnitudes near the documented 2.6e16 headroom (|s| up
     to 1e14 at 1e6 tokens/doc × 1e6 log-scale), at s = 0, and on exact
-    ties. Pure expression pin over a literal frame (no fixture)."""
+    ties. Pure expression pin over a literal frame (no fixture). The
+    same packed_argmin must also equal the top_k window pick, and unpack
+    the winning score exactly, on the PQ shape (non-negative distances,
+    16 codes)."""
     from pyspark.sql import functions as F
+
+    from repcheck_data_integration_spark.operators.topk import (
+        packed_argmin,
+        packed_idx,
+        packed_score,
+        top_k,
+    )
 
     rows = [
         # (doc, s, idx): doc 1 — tie on the max s=-5 → idx 1 wins
@@ -279,14 +289,50 @@ def test_nb_packed_argmax_matches_struct_argmax(spark):
         (3, 0, 2),
         (3, -1, 0),
     ]
-    df = spark.createDataFrame(rows, ["doc", "s", "idx"])
-    packed = df.groupBy("doc").agg(
-        F.min((-F.col("s")) * 256 + F.col("idx")).alias("pk")
-    ).select("doc", F.pmod(F.col("pk"), F.lit(256)).alias("idx"))
-    struct = df.groupBy("doc").agg(
-        F.min(F.struct((-F.col("s")).alias("n"), F.col("idx").alias("i")))
-        .alias("m")
-    ).select("doc", F.col("m.i").alias("idx"))
-    got = {r["doc"]: r["idx"] for r in packed.collect()}
-    want = {r["doc"]: r["idx"] for r in struct.collect()}
-    assert got == want == {1: 1, 2: 0, 3: 2}
+
+    def picks(rows, k, neg):
+        """(packed, struct-min, window) picks as {doc: (idx, score)}."""
+        df = spark.createDataFrame(rows, ["doc", "s", "idx"])
+        score = -F.col("s") if neg else F.col("s")
+        pk = F.col("pk")
+        packed = df.groupBy("doc").agg(
+            packed_argmin(score, F.col("idx"), k).alias("pk")
+        ).select("doc", packed_idx(pk, k).alias("i"), packed_score(pk, k).alias("v"))
+        struct = df.groupBy("doc").agg(
+            F.min(F.struct(score.alias("v"), F.col("idx").alias("i"))).alias("m")
+        ).select("doc", "m.i", "m.v")
+        window = top_k(
+            df.select("doc", F.col("idx").alias("i"), score.alias("v")),
+            ["doc"],
+            ["v", "i"],
+        )
+        return [
+            {r["doc"]: (r["i"], r["v"]) for r in f.collect()}
+            for f in (packed, struct, window)
+        ]
+
+    got, want, win = picks(rows, 256, neg=True)
+    assert got == want == win
+    assert {d: i for d, (i, _) in got.items()} == {1: 1, 2: 0, 3: 2}
+    pq_rows = [
+        (1, 40, 3), (1, 40, 2), (1, 41, 0),  # tie on dist → code 2
+        (2, 0, 15), (2, 5, 0),  # dist 0 at the top code
+        (3, 2**50, 7), (3, 2**50 + 1, 1),  # headroom magnitudes
+    ]
+    got, want, win = picks(pq_rows, 16, neg=False)
+    assert got == want == win == {1: (2, 40), 2: (15, 0), 3: (7, 2**50)}
+
+
+def test_packed_argmin_rejects_idx_outside_domain(spark):
+    """The idx domain [0, k) is asserted in-plan on every packed row: an
+    idx of k would alias the next score, a negative idx the previous."""
+    import pytest
+
+    from repcheck_data_integration_spark.operators.topk import packed_argmin
+
+    for bad in (16, -1):
+        df = spark.createDataFrame([(1, 5, 0), (1, 3, bad)], "g int, s long, idx int")
+        with pytest.raises(Exception, match="packed_argmin"):
+            df.groupBy("g").agg(
+                packed_argmin(F.col("s"), F.col("idx"), 16)
+            ).collect()

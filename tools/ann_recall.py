@@ -19,10 +19,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from repcheck_data_integration_spark import registry
+from repcheck_data_integration_spark.operators.topk import top_k
 from repcheck_data_integration_spark.session import get_spark
 from repcheck_data_integration_spark.tables import load
 
@@ -56,8 +56,7 @@ def exact_mips_topk(spark, sf_dir: str, k: int, n_queries: int):
             ).alias("ip"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("ip").desc(), F.col("cand_id"))
-    return ip.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+    return top_k(ip, ["query_id"], [F.col("ip").desc(), F.col("cand_id")], k=k)
 
 
 def recall_rows(spark, sf_dir: str) -> list[dict]:

@@ -57,7 +57,7 @@ def count_unauditable_nodes(df) -> int:
     window count CANNOT see into (ADVICE r8 #1: an eager localCheckpoint
     hides its upstream windows from the audit exactly the way .persist()
     did before round 8's InMemoryRelation recursion). A sound audit of a
-    checkpointing query builds it with operators.ckpt.PLAN_ONLY = True
+    checkpointing query builds it inside operators.ckpt.plan_only()
     (audit() does) so this returns 0; a non-zero count means the pin
     `count_unpartitioned_windows(df) == 0` is partially vacuous."""
     _, u, _ = _walk_plan(df)
@@ -134,13 +134,16 @@ def audit(
     that has at least one. Queries whose builder fails (env-gated stubs)
     are skipped — they can't hide a window.
 
-    Builds every query with operators.ckpt.PLAN_ONLY = True (round-9,
-    ADVICE r8 #1/#3): build-time eager localCheckpoints are suppressed so
-    (a) the audit sees the FULL pre-checkpoint tree instead of an opaque
-    LogicalRDD, and (b) the pin()-routed checkpoint side effects never
-    fire during a mere audit. ``rank_out`` (round-10) collects, in the
-    same single plan walk, the per-query count of Window nodes carrying
-    an IntegerType ranking function — see count_int_rank_windows.
+    Builds every query inside operators.ckpt.plan_only() (round-9,
+    ADVICE r8 #1/#3): pin()-routed eager localCheckpoints are suppressed
+    so (a) the audit sees the FULL pre-checkpoint tree instead of an
+    opaque LogicalRDD, and (b) no pin() checkpoint fires during a mere
+    audit. (b) covers pin() only: the shared components memo
+    (ckpt.shared_components / shared_stream_components) still builds,
+    checkpoint included, once per audit session on first use.
+    ``rank_out`` (round-10) collects, in the same single plan walk, the
+    per-query count of Window nodes carrying an IntegerType ranking
+    function — see count_int_rank_windows.
     ``schema_out`` / ``fail_out`` (round-11) collect each query's analyzed
     schema and any builder exception in the SAME sweep, so consumers that
     only need schemas (tests/test_driver_canon.py) share this one
@@ -149,8 +152,8 @@ def audit(
     Iterative loops are the documented
     exception (ADVICE r9): their convergence probes (connected
     components, PageRank, BPE) still execute jobs at CONSTRUCTION time
-    even in plan-only mode — e.g. split_leakage_safe /
-    dq_split_contamination fall through shared_components to a live
+    even in plan-only mode — e.g. the first of split_leakage_safe /
+    dq_split_contamination builds the shared_components memo, a live
     dedup_components CC loop. Any truncated leaf that survives plan-only
     mode is reported through ``unauditable_out`` so vacuous coverage is
     visible, not silent; tools/window_audit.py --rounds (round-10) audits
@@ -159,9 +162,7 @@ def audit(
 
     registry.load_all_modules()
     out: dict[str, int] = {}
-    prior = ckpt.PLAN_ONLY
-    ckpt.PLAN_ONLY = True
-    try:
+    with ckpt.plan_only():
         for name in names or list(registry.QUERIES):
             # Round-8 blindness fix: a PRIOR query's .persist() of a shared
             # subtree makes the optimizer substitute InMemoryRelation into
@@ -186,8 +187,6 @@ def audit(
                 unauditable_out[name] = u
             if r and rank_out is not None:
                 rank_out[name] = r
-    finally:
-        ckpt.PLAN_ONLY = prior
     return out
 
 
