@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load
+from .ckpt import pin
 
 TOKEN_RE = "[a-z0-9]+"
 N_MINHASH = 8
@@ -302,11 +303,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on band buckets, never an n² compare."""
     d = load(spark, sf_dir, "documents")
     # the shingle frame feeds three consumers (minhash explode + both verify
-    # sides) → persist once; with the pre-filtered two-stage shingle build
+    # sides) → pin once; with the pre-filtered two-stage shingle build
     # the materialization is cheap
-    sh = (
-        with_shingles(d.select("doc_id", "text")).select("doc_id", "sh").persist()
-    )
+    sh = pin(with_shingles(d.select("doc_id", "text")).select("doc_id", "sh"))
     # minhash via explode + hash aggregate rather than per-array lambdas:
     # expressions inside higher-order functions run interpreted, while the
     # exploded md5/substring/min pipeline stays in whole-stage codegen with

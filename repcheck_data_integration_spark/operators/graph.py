@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
+from .ckpt import pin
 from .dedup import sql_stable_round4
 from .topk import top_k
 
@@ -333,8 +334,6 @@ def label_propagation(
     neighborhood relation is persisted once; each round's label frame is
     localCheckpoint'ed so lineage stays flat and the per-round join reads
     a materialized plan, not a growing tree."""
-    from .ckpt import pin
-
     closed = und.unionAll(
         und.select(F.col("v"), F.col("v").alias("n")).distinct()
     ).persist()
@@ -809,9 +808,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each half-iteration is one equi-join of the edge list
     against the current score vector (shuffle on the joined endpoint —
     the natural bucketing key) plus one hash aggregate; the L1 totals are
-    single-row aggregates broadcast back with a crossJoin. Edge list is
-    persisted once; nothing driver-side ever exceeds one row per
-    normalization constant.
+    single-row aggregates collected as scalars. Edge list is pinned once;
+    nothing collected ever exceeds one row per normalization constant.
     """
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -821,24 +819,21 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
         )
         .distinct()
-        .persist()  # three score-update joins over the same edge list
     )
-    # Prime the cache with one materializing action BEFORE the L1-total
-    # broadcast subtrees plan their own jobs: un-primed, each broadcast
-    # stage (at1/ht1/at2) raced to recompute the join+distinct — 3
-    # redundant edge builds, measured 5.4s -> ~2s at sf0.1. One count()
-    # job IS the single edge build; every later stage reads the cache.
-    edges.count()
+    # Pin the edge list (three score-update joins read it) BEFORE the
+    # L1-total jobs plan their own stages: unmaterialized, each total job
+    # (at1/ht1/at2) recomputed the join+distinct — 3 redundant edge
+    # builds, measured 5.4s -> ~2s at sf0.1.
+    edges = pin(edges)
 
     def l1_normalize(df: DataFrame, score: str) -> DataFrame:
-        # Persist the raw score frame and pull the ONE L1 total as a
-        # driver scalar (house-allowed singleton collect): a broadcast-
-        # subtree total re-ran the whole upstream iteration chain per
-        # consumer (O(k^2) shuffles across the unrolled iterations —
-        # measured 5.4s at sf0.1); eager normalization runs each
-        # iteration's join+agg exactly once and later stages read the
-        # caches.
-        df = df.persist()
+        # Pin the raw score frame and collect the ONE L1 total as a
+        # scalar (house-allowed singleton collect): a broadcast-subtree
+        # total re-ran the whole upstream iteration chain per consumer
+        # (O(k^2) shuffles across the unrolled iterations — measured 5.4s
+        # at sf0.1); eager normalization runs each iteration's join+agg
+        # exactly once and later stages read the pinned frames.
+        df = pin(df)
         total = df.agg(F.sum(score)).first()[0]
         return df.select(
             *[c for c in df.columns if c != score],

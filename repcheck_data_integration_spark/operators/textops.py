@@ -191,8 +191,9 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the natural co-location key for inverted-index workloads."""
     d = load(spark, sf_dir, "documents")
     # tc feeds both the tf side and the document-frequency aggregate —
-    # persist so the explode+agg subtree runs once, not per consumer
-    tc = term_counts(d).persist()
+    # pin so the explode+agg subtree runs once, not per consumer (the two
+    # readers plan different aggregates, so no exchange is reused)
+    tc = pin(term_counts(d))
     df = tc.groupBy("tok").agg(F.count(F.lit(1)).alias("doc_freq"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

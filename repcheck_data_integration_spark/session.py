@@ -41,6 +41,17 @@ def get_spark(
         # Arrow for pandas_udf / toPandas round trips.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Generated-class cache sized for a multi-query session. The
+        # 100-entry default thrashed on perfbench's 17-query pipelines_1x
+        # mix: ~230 Janino compiles (~2.5 s) in every later pass, ~4 with
+        # room for the working set. The retained classes cost ~11 MB of
+        # heap on that mix (heap_retained_mb 110.7 -> 121.9 MB).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The SQL UI's execution history (default 1000) has no reader with
+        # the UI off; the event log and the status tracker's job groups
+        # do not use it. 50 returns ~4 MB of that heap on pipelines_1x
+        # (121.9 -> 118.0 MB).
+        .config("spark.sql.ui.retainedExecutions", "50")
         # parquet ns timestamps in the fixtures; read as micros deterministically
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # honor a bucketed table's sortBy metadata on scan (Spark 3.1+

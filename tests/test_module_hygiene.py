@@ -190,3 +190,34 @@ def test_top_k_guard_sees_the_hand_rolled_shapes(tmp_path):
         "    return r.filter(F.col('t') < F.col('n')).filter(F.col('t') == 2)\n"
     )
     assert hand_rolled_top_k(str(src)) == [2, 6, 9]
+
+
+def _pipelines_1x_queries() -> tuple[str, ...]:
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(PKG), "perfbench"))
+    from workloads import WORKLOADS
+
+    return WORKLOADS["pipelines_1x"].queries
+
+
+def test_pipelines_queries_leave_no_cached_relations(spark, sf_dir):
+    """Each query of the perfbench pipelines_1x mix, built, drained and
+    dropped, leaves the session's cache manager empty. A cached relation
+    outlives its query and is substituted into every later identical
+    subtree, other queries' plans included (the round-8 InMemoryRelation
+    substitution trap); multi-reader frames go through ckpt.pin instead."""
+    from repcheck_data_integration_spark import registry
+
+    registry.load_all_modules()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    leaked = []
+    for name in _pipelines_1x_queries():
+        df = registry.QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        del df
+        if not cache.isEmpty():
+            leaked.append(name)
+            spark.catalog.clearCache()
+    assert not leaked, f"queries left cached relations behind: {leaked}"

@@ -495,12 +495,19 @@ def test_pmi_df_floor_prunes_before_self_join(spark):
 
 
 def test_hits_broadcasts_norm_totals_and_caches_edges(spark):
+    from repcheck_data_integration_spark.operators import ckpt
+
+    # the edge list and each score frame are pinned (checkpointed) once,
+    # so the drained plan reads the two output score frames and re-runs
+    # no iteration
     p = plan(spark, "graph_hits")
-    # the 1-row L1 totals join back as broadcasts, never a shuffled join;
-    # the edge list is persisted once for its three score-update passes
-    assert "CartesianProduct" not in p
-    assert "InMemoryTableScan" in p
-    assert "BroadcastExchange" in p
+    assert p.count("Scan ExistingRDD (") == 2
+    # un-pinned, the score-update joins show: the node-sized score
+    # vectors join the edge list as broadcasts, never a shuffled join
+    with ckpt.plan_only():
+        full = plan(spark, "graph_hits")
+    assert "CartesianProduct" not in full
+    assert "BroadcastExchange" in full
 
 
 def test_dsir_model_broadcast_scoring_single_shuffle(spark):

@@ -301,3 +301,34 @@ def test_lsh_hot_bucket_salted_candidates(spark, tmp_path):
     assert gmax > 2 * D.CAND_BUCKET_CAP
     # generous regression backstop for the 10x-probe wall at this shape
     assert wall < 60, f"hot-bucket LSH took {wall:.1f}s"
+
+
+def test_codegen_cache_holds_a_multi_query_working_set(spark):
+    """session.get_spark sizes the generated-class cache for a session
+    that runs many queries: a second build-and-drain of the same queries
+    compiles nothing. These six generate ~140 classes at sf0.001, more
+    than Spark's 100-entry default holds, which recompiled ~134 of them
+    on every repeat."""
+    from repcheck_data_integration_spark import registry
+
+    registry.load_all_modules()
+    names = (
+        "graph_hits",
+        "dedup_minhash_lsh",
+        "join_phonetic_block",
+        "snk_upsert",
+        "join_spatial_knn",
+        "ml_lasso_cd",
+    )
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_all() -> int:
+        before = compiles.getCount()
+        for name in names:
+            registry.QUERIES[name](spark, SF).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return compiles.getCount() - before
+
+    run_all()
+    assert run_all() == 0

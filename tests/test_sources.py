@@ -532,3 +532,85 @@ def test_bucket_table_gc_scope(tmp_path):
     assert old_dead not in left
     assert legacy_nopid not in left
     assert legacy_probe not in left
+
+
+def _jobs_in(spark, group: str, fn):
+    """fn() run under a fresh status-tracker job group; (result, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _analyzed(df) -> str:
+    import re
+
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().analyzed().toString())
+
+
+def test_load_memoizes_inferred_schema(spark, sf_dir, tmp_path):
+    """tables.load infers a file's parquet schema once per session and
+    file content: a later load starts no Spark job and resolves to the
+    same schema and analyzed plan; a file rewritten in place (new size
+    or mtime) is inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from repcheck_data_integration_spark.tables import load
+
+    sf = str(tmp_path)
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), sf)
+    first, jobs_first = _jobs_in(spark, "memo_first", lambda: load(spark, sf, "nation"))
+    again, jobs_again = _jobs_in(spark, "memo_again", lambda: load(spark, sf, "nation"))
+    assert jobs_first >= 1
+    assert jobs_again == 0
+    assert again.schema == first.schema
+    assert _analyzed(again) == _analyzed(first)
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    # rewritten in place with a different schema: new fingerprint, new
+    # inference, and the new column is visible
+    pq.write_table(
+        pa.table({"n_nationkey": [1, 2], "extra": ["a", "b"]}),
+        os.path.join(sf, "nation.parquet"),
+    )
+    rewritten, jobs = _jobs_in(spark, "memo_rewritten", lambda: load(spark, sf, "nation"))
+    assert jobs >= 1
+    assert rewritten.columns == ["n_nationkey", "extra"]
+    assert rewritten.count() == 2
+
+
+def test_schema_memo_keys_on_inference_confs(spark, sf_dir):
+    """events in the plain session shape and in the parity shape
+    (inferTimestampNTZ on, as tools/check.py's parity mode runs) infer
+    different raw schemas; each gets its own
+    memo entry, and a memo hit has the dtypes of a read without the memo
+    (the first load of each shape misses and is the plain read)."""
+    import repcheck_data_integration_spark.tables as T
+
+    sf = sf_dir
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prior = spark.conf.get(ntz)
+    fp = T._content_fingerprint(os.path.join(sf, "events.parquet"))
+    for k in [k for k in T._SCHEMAS if k[1] == fp]:
+        del T._SCHEMAS[k]
+    try:
+        for shape, value in (("plain", "false"), ("parity", "true")):
+            spark.conf.set(ntz, value)
+            unmemoized = T.load(spark, sf, "events").dtypes
+            memoized, jobs = _jobs_in(
+                spark, f"memo_events_{shape}", lambda: T.load(spark, sf, "events")
+            )
+            assert jobs == 0, shape
+            assert memoized.dtypes == unmemoized, shape
+    finally:
+        spark.conf.set(ntz, prior)
+    raw_ts = sorted(
+        s["ts"].dataType.typeName() for k, s in T._SCHEMAS.items() if k[1] == fp
+    )
+    assert raw_ts == ["timestamp", "timestamp_ntz"]

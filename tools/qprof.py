@@ -8,6 +8,11 @@ Per CLAUDE.md measurement traps: the DataFrame is REBUILT per trial (a
 re-collected DataFrame object reuses materialized shuffle map outputs and
 reports fiction), and each query gets a labeled job description. The plan
 is captured from a fresh build (pre-execution, AQE initial plan).
+
+Each trial also records the Janino compiles it caused (CodegenMetrics'
+compilation-time histogram count) and their total milliseconds
+(CodeGenerator.compileTime), printed next to the timings: a trial that
+compiles is paying codegen, not execution.
 """
 
 from __future__ import annotations
@@ -28,6 +33,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def drain(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def compile_stats(spark) -> tuple[int, float]:
+    """(Janino compiles so far, their total ms) in this JVM."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
 
 
 def main() -> None:
@@ -64,14 +77,21 @@ def main() -> None:
         except Exception as e:
             print(f"# warmup {name} skipped: {e}", file=sys.stderr)
         trials = []
+        compiles = []
         for _ in range(args.trials):
             spark.sparkContext.setJobDescription(f"qprof:{name}")
+            n0, ms0 = compile_stats(spark)
             t0 = time.time()
             drain(fn(spark, SF_DIR))
             trials.append(round(time.time() - t0, 3))
+            n1, ms1 = compile_stats(spark)
+            compiles.append(f"{n1 - n0}/{ms1 - ms0:.0f}ms")
         spark.sparkContext.setJobDescription(None)
         results[name] = min(trials)
-        print(f"# {name}: min {min(trials)}s trials {trials}", file=sys.stderr)
+        print(
+            f"# {name}: min {min(trials)}s trials {trials} compiles {compiles}",
+            file=sys.stderr,
+        )
     print(json.dumps(results))
     spark.stop()
 
